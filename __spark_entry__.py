@@ -83,7 +83,7 @@ def _index(spark: SparkSession, sf_dir: str) -> FuseIndex:
         # stale index built by older code or over regenerated fixture
         # data must not be resumed into the new layout
         out = os.path.join(
-            tempfile.gettempdir(), "pyfusedb_entry_idx_v3",
+            tempfile.gettempdir(), "pyfusedb_entry_idx_v4",
             key.strip("/").replace("/", "_") + "_" + _fixture_sig(sf_dir, "documents.parquet"),
         )
         os.makedirs(out, exist_ok=True)
@@ -561,7 +561,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         key = os.path.abspath(sf) + ":english"
         if key not in _INDEX_CACHE:
             out = os.path.join(
-                tempfile.gettempdir(), "pyfusedb_entry_idx_en_v2",
+                tempfile.gettempdir(), "pyfusedb_entry_idx_en_v3",
                 os.path.abspath(sf).strip("/").replace("/", "_")
                 + "_" + _fixture_sig(sf, "documents.parquet"),
             )
@@ -588,7 +588,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             rows = sub.limit(ORACLE_CAP + 1).collect()
             assert len(rows) <= ORACLE_CAP, "subsample still over oracle cap"
             sub_out = os.path.join(
-                tempfile.gettempdir(), "pyfusedb_entry_idx_en_sub",
+                tempfile.gettempdir(), "pyfusedb_entry_idx_en_sub_v2",
                 os.path.abspath(sf).strip("/").replace("/", "_")
                 + "_" + _fixture_sig(sf, "documents.parquet"),
             )

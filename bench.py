@@ -109,7 +109,6 @@ def _bench_synth(spark, synth_rows: int, cpus: int, timings: dict, extras: dict)
         "noop"
     ).mode("overwrite").save()
     corpus.limit(2000).count()  # touch the corpus files too
-    # posting mode A/B knob; file-shuffle is the production default.
     # n_tparts is rows-derived, NOT cpus-derived, so the N->4N scaling
     # pair measures the same work decomposition at both parallelism
     # levels. Target ~16k docs per tpart, clamped to [16, 64]:
@@ -120,7 +119,6 @@ def _bench_synth(spark, synth_rows: int, cpus: int, timings: dict, extras: dict)
     #   ~13% more stage_tf (file fan-out) for no extra postings win.
     # - at 150k rows -> 16: 64 tparts over a small corpus is pure file
     #   fan-out overhead (A/B: build 14.5s@64 vs 4.0s@16).
-    mode = os.environ.get("BENCH_POSTING_MODE", "file-shuffle")
     n_tparts = int(
         os.environ.get("BENCH_N_TPARTS", str(max(16, min(64, synth_rows // 15_625))))
     )
@@ -135,7 +133,7 @@ def _bench_synth(spark, synth_rows: int, cpus: int, timings: dict, extras: dict)
     build_index(
         spark, corpus, sdir, doc_id_col="doc_id",
         config=IndexConfig(preset="code", n_buckets=4, compute_norms=False,
-                           shuffle_partitions=cpus, posting_mode=mode,
+                           shuffle_partitions=cpus,
                            n_tparts=n_tparts, scan_tasks=scan_tasks,
                            max_tf_files_per_tpart=max_tf_files or None),
         resume=False,

@@ -31,20 +31,15 @@ def main(argv: list[str] | None = None) -> int:
                     help="comma-separated unique sort key for id assignment "
                          "(default: all columns; code corpus: repo,path,commit)")
     ap.add_argument("--preset", default="code", choices=["english", "simple", "code"])
-    ap.add_argument("--buckets", type=int, default=8)
+    ap.add_argument("--buckets", type=int, default=8,
+                    help="doc-range buckets (chunk-size bound and tpart skew salt)")
     ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--k1", type=float, default=1.2)
     ap.add_argument("--b", type=float, default=0.75)
     ap.add_argument("--no-norms", action="store_true",
                     help="skip exact TF-IDF norms (BM25-only index)")
-    ap.add_argument("--posting-mode", default="file-shuffle",
-                    choices=["file-shuffle", "per-bucket", "single-pass"],
-                    help="file-shuffle (default): zero-live-exchange tpart "
-                         "pipeline (the mode that meets the N->4N scaling "
-                         "target); per-bucket/single-pass: legacy live "
-                         "repartitionByRange exchange")
     ap.add_argument("--n-tparts", type=int, default=None,
-                    help="file-shuffle fan-out (default: corpus-derived, "
+                    help="tf fan-out = posting encoder task count (default: corpus-derived, "
                          "~15625 docs per tpart capped at 4x parallelism); "
                          "keep constant across cluster sizes when measuring "
                          "scaling")
@@ -52,7 +47,9 @@ def main(argv: list[str] | None = None) -> int:
                     help="insert a per-tpart combine pass when the corpus "
                          "scan ran on more tasks than this (bounds tf fan-"
                          "out at 10^5 map tasks); 0 disables")
-    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    ap.add_argument("--shuffle-partitions", type=int, default=None,
+                    help="parallelism the default --n-tparts derives from "
+                         "(default: Spark's defaultParallelism)")
     ap.add_argument("--fresh", action="store_true", help="ignore committed manifests")
     args = ap.parse_args(argv)
 
@@ -81,7 +78,6 @@ def main(argv: list[str] | None = None) -> int:
             n_buckets=args.buckets,
             compute_norms=not args.no_norms,
             shuffle_partitions=args.shuffle_partitions,
-            posting_mode=args.posting_mode,
             n_tparts=args.n_tparts,
             max_tf_files_per_tpart=args.max_tf_files_per_tpart or None,
         ),

@@ -80,17 +80,6 @@ def term_freqs_udf(preset: str):
 
 _MAX_RUN = 1024  # max postings per packed run row (bounds reader memory)
 
-PACKED_TF_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("bucket", T.IntegerType(), False),
-        T.StructField("tpart", T.IntegerType(), False),
-        T.StructField("docs", T.ArrayType(T.LongType()), False),
-        T.StructField("tfs", T.ArrayType(T.IntegerType()), False),
-        T.StructField("dls", T.ArrayType(T.IntegerType()), False),
-    ]
-)
-
 
 def term_tpart(term: str, n_tparts: int) -> int:
     """Deterministic term -> base hash-partition id, shared by the build
@@ -116,14 +105,15 @@ def term_tpart_probe(term: str, n_tparts: int, spread: int) -> list[int]:
     return sorted({(base + j) % n_tparts for j in range(max(1, spread))})
 
 
-def make_packed_tf_exploder(preset: str, bucket_span: int, content_col: str = "content",
-                            n_tparts: int = 1, tpart_spread: int = 1):
-    """mapInArrow fn: corpus rows -> PACKED per-(term,bucket) partial
-    posting runs, one row per distinct (term, bucket) per Arrow batch.
+def make_run_packer(bucket_span: int, n_tparts: int = 1, tpart_spread: int = 1):
+    """``pack_batch(ids, counters, lens)``: one Arrow batch of docs'
+    term Counters (and their lengths) -> PACKED per-(term,bucket)
+    partial posting runs (term, bucket, tpart, docs, tfs, dls), one
+    row per distinct (term, bucket).
 
     This is the SPIMI map-side partial posting list (north star: partial
-    lists built BEFORE the repartition-by-term shuffle): the shuffle then
-    carries ~|batch vocabulary| packed rows instead of one row per
+    lists built BEFORE the term-routed tpart files): the tf files then
+    carry ~|batch vocabulary| packed rows instead of one row per
     posting — long-tail terms cost the same, but every mid/hot term
     collapses its per-batch postings into three packed int arrays and
     ONE term string. Term grouping uses pd.factorize (hash, O(n)) + an
@@ -151,8 +141,7 @@ def make_packed_tf_exploder(preset: str, bucket_span: int, content_col: str = "c
         ]
     )
 
-    def pack_batch(ids: np.ndarray, counters: list) -> "pa.RecordBatch | None":
-        lens = np.fromiter((sum(c.values()) for c in counters), np.int64, len(counters))
+    def pack_batch(ids: np.ndarray, counters: list, lens: np.ndarray) -> "pa.RecordBatch | None":
         reps = np.fromiter((len(c) for c in counters), np.int64, len(counters))
         ntot = int(reps.sum())
         if ntot == 0:
@@ -212,26 +201,17 @@ def make_packed_tf_exploder(preset: str, bucket_span: int, content_col: str = "c
         ]
         return pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
-    def pack(batches):
-        az = _get_analyzer(preset)
-        analyze = az.analyze
-        for batch in batches:
-            if not batch.num_rows:
-                continue
-            ids = batch.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            contents = batch.column(content_col).to_pylist()
-            rb = pack_batch(ids, [Counter(analyze(c or "")) for c in contents])
-            if rb is not None:
-                yield rb
-
-    pack.pack_batch = pack_batch
-    return pack
+    return pack_batch
 
 
 TF_TASK_SCHEMA = T.StructType(
     [
         T.StructField("pid", T.IntegerType(), False),
         T.StructField("n_docs", T.LongType(), False),
+        T.StructField("total_len", T.LongType(), False),
+        # Σ int(sha256[:15], 16) over the task's docs: up to 2^60 per
+        # doc, so a decimal string keeps the sum exact past 2^63
+        T.StructField("lineage", T.StringType(), False),
     ]
 )
 
@@ -242,15 +222,19 @@ def make_tf_fused_task(
     content_col: str,
     n_tparts: int,
     staging_tf: str,
-    staging_sha: str,
+    staging_ds: str,
     tpart_spread: int = 1,
 ):
-    """Fused map-side stage for the file-shuffle build: ONE corpus scan
-    that tokenizes, packs partial posting runs, computes sha256 lineage,
-    and writes BOTH outputs itself with pyarrow —
+    """Fused map-side stage of the build: ONE corpus scan that
+    tokenizes, packs partial posting runs, computes doc lengths and
+    sha256 lineage, and writes BOTH outputs itself with pyarrow —
 
       staging_tf/tpart=P/part-<pid>.parquet   packed runs (hive tpart)
-      staging_sha/part-<pid>.parquet          (doc_id, sha256)
+      staging_ds/part-<pid>.parquet           (doc_id, doc_len, sha256)
+
+    and yields one stats row (pid, n_docs, Σdoc_len, Σsha-prefix) that
+    the driver folds into the stage manifests — doc_len is the sum of
+    each doc's Counter, so no later pass re-reads the postings for it.
 
     This is the map side of a classic shuffle-file exchange, expressed
     as parquet: each task keeps one open ParquetWriter per tpart (one
@@ -262,12 +246,11 @@ def make_tf_fused_task(
     is bit-identical to F.sha2(col, 256) and DuckDB's sha256 (oracle-
     checked). Task fan-out: n_scan_tasks x n_tparts files — bound
     n_tparts accordingly (same knob as encoder memory)."""
-    packer = make_packed_tf_exploder(preset, bucket_span, content_col, n_tparts,
-                                     tpart_spread)
-    pack_batch = packer.pack_batch
+    pack_batch = make_run_packer(bucket_span, n_tparts, tpart_spread)
     import pyarrow as pa
 
-    out_schema = pa.schema([("pid", pa.int32()), ("n_docs", pa.int64())])
+    out_schema = pa.schema([("pid", pa.int32()), ("n_docs", pa.int64()),
+                            ("total_len", pa.int64()), ("lineage", pa.string())])
 
     def run(batches):
         import hashlib
@@ -280,8 +263,8 @@ def make_tf_fused_task(
         az = _get_analyzer(preset)
         analyze = az.analyze
         writers: dict[int, fsio.AtomicParquetWriter] = {}
-        sha_writer = None
-        ndocs = 0
+        ds_writer = None
+        ndocs = total_len = lineage = 0
         for batch in batches:
             if not batch.num_rows:
                 continue
@@ -290,18 +273,23 @@ def make_tf_fused_task(
             shas = [
                 hashlib.sha256((c or "").encode("utf-8")).hexdigest() for c in contents
             ]
-            sha_tbl = pa.table(
-                {"doc_id": pa.array(ids, pa.int64()), "sha256": pa.array(shas, pa.string())}
+            counters = [Counter(analyze(c or "")) for c in contents]
+            lens = np.fromiter((sum(c.values()) for c in counters), np.int64, len(counters))
+            ds_tbl = pa.table(
+                {"doc_id": pa.array(ids, pa.int64()), "doc_len": pa.array(lens, pa.int64()),
+                 "sha256": pa.array(shas, pa.string())}
             )
-            if sha_writer is None:
-                fsio.makedirs(staging_sha)
-                sha_writer = fsio.AtomicParquetWriter(
-                    fsio.join(staging_sha, f"part-{pid:05d}.parquet"),
-                    sha_tbl.schema, compression="snappy",
+            if ds_writer is None:
+                fsio.makedirs(staging_ds)
+                ds_writer = fsio.AtomicParquetWriter(
+                    fsio.join(staging_ds, f"part-{pid:05d}.parquet"),
+                    ds_tbl.schema, compression="snappy",
                 )
-            sha_writer.write_table(sha_tbl)
+            ds_writer.write_table(ds_tbl)
             ndocs += len(ids)
-            rb = pack_batch(ids, [Counter(analyze(c or "")) for c in contents])
+            total_len += int(lens.sum())
+            lineage += sum(int(h[:15], 16) for h in shas)
+            rb = pack_batch(ids, counters, lens)
             if rb is None:
                 continue
             tps = np.asarray(rb.column("tpart").to_numpy(zero_copy_only=False))
@@ -321,23 +309,54 @@ def make_tf_fused_task(
                 w.write_table(sub)
         for w in writers.values():
             w.close()
-        if sha_writer is not None:
-            sha_writer.close()
+        if ds_writer is not None:
+            ds_writer.close()
         yield pa.RecordBatch.from_arrays(
-            [pa.array([pid], pa.int32()), pa.array([ndocs], pa.int64())],
+            [pa.array([pid], pa.int32()), pa.array([ndocs], pa.int64()),
+             pa.array([total_len], pa.int64()), pa.array([str(lineage)], pa.string())],
             schema=out_schema,
         )
 
     return run
 
 
-def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
-    """mapInArrow fn merging packed runs into encoded chunks.
+def extract_runs(batch):
+    """One batch/chunk of packed runs -> (terms_obj, bucket, run_lens,
+    flat docs, flat tfs, flat dls). Per-chunk flatten keeps this correct
+    for ANY chunking — a table whose columns cannot combine into one
+    chunk (>2 GiB offsets) is handled by concatenating per-chunk numpy
+    views (round-2 ADVICE: the old to_batches()[0] silently dropped rows
+    past batch 0)."""
+    import pyarrow.compute as pc
 
-    Input: PACKED_TF_SCHEMA batches in ARBITRARY row order within the
-    partition (the build no longer pays a JVM sortWithinPartitions on
-    rows carrying fat array payloads — round-2 scaling work: the posting
-    shuffle's reduce-side sort was the stage's scaling bottleneck).
+    docs_la = batch.column("docs")
+    tfs_la = batch.column("tfs")
+    dls_la = batch.column("dls")
+    return (
+        np.asarray(batch.column("term").to_pandas(), dtype=object),
+        np.asarray(batch.column("bucket").to_numpy(zero_copy_only=False), dtype=np.int64),
+        np.asarray(pc.list_value_length(docs_la).to_numpy(zero_copy_only=False)),
+        np.asarray(docs_la.flatten().to_numpy(zero_copy_only=False), dtype=np.int64),
+        np.asarray(tfs_la.flatten().to_numpy(zero_copy_only=False)),
+        np.asarray(dls_la.flatten().to_numpy(zero_copy_only=False)),
+    )
+
+
+def concat_runs(parts):
+    """Concatenate extract_runs tuples."""
+    if len(parts) == 1:
+        return parts[0]
+    return tuple(np.concatenate([p[i] for p in parts]) for i in range(6))
+
+
+def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
+    """``encode_arrays(*concat_runs(parts), pid)``: merge packed runs into
+    encoded chunks, one Arrow batch of chunk rows sorted by
+    (term, bucket).
+
+    Input runs come in ARBITRARY row order (no JVM row sort over rows
+    carrying fat array payloads — round-2 scaling work: a reduce-side
+    sort was the posting stage's scaling bottleneck).
     Grouping happens here instead, at Arrow/numpy speed: the term column
     is dictionary-encoded (C-speed hash), only the UNIQUE terms are
     string-sorted (|vocab_partition| << |rows|), and postings get ONE
@@ -355,10 +374,10 @@ def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
     (app/InvertedIndexFinal.py:287-346), distributed — then
     codec.encode_postings_multi for every group at once.
 
-    Memory: materializes one shuffle partition's packed runs (bounded by
-    n_shuffle sizing — see operators/build.py scale notes)."""
+    Memory: materializes one tpart's packed runs (bounded by n_tparts
+    sizing — see operators/build.py scale notes), or one streaming fold
+    partition's decoded chunks."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     out_fields = [
         ("bucket", pa.int32()),
@@ -375,29 +394,6 @@ def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
         ("enc_micros", pa.int64()),
     ]
     out_schema = pa.schema(out_fields)
-
-    def _extract(batch):
-        """One batch/chunk -> (terms_obj, bucket, run_lens, flat arrays).
-        Per-chunk flatten keeps this correct for ANY chunking — a table
-        whose columns cannot combine into one chunk (>2 GiB offsets) is
-        handled by concatenating per-chunk numpy views (round-2 ADVICE:
-        the old to_batches()[0] silently dropped rows past batch 0)."""
-        docs_la = batch.column("docs")
-        tfs_la = batch.column("tfs")
-        dls_la = batch.column("dls")
-        return (
-            np.asarray(batch.column("term").to_pandas(), dtype=object),
-            np.asarray(batch.column("bucket").to_numpy(zero_copy_only=False), dtype=np.int64),
-            np.asarray(pc.list_value_length(docs_la).to_numpy(zero_copy_only=False)),
-            np.asarray(docs_la.flatten().to_numpy(zero_copy_only=False), dtype=np.int64),
-            np.asarray(tfs_la.flatten().to_numpy(zero_copy_only=False)),
-            np.asarray(dls_la.flatten().to_numpy(zero_copy_only=False)),
-        )
-
-    def _concat_extracted(parts):
-        if len(parts) == 1:
-            return parts[0]
-        return tuple(np.concatenate([p[i] for p in parts]) for i in range(6))
 
     def encode_arrays(
         terms: np.ndarray,
@@ -428,11 +424,11 @@ def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
         if len(g_sorted) * (maxd + 1) < (1 << 62):
             # one combined integer key -> single sort pass (duplicate
             # (group, doc) keys are interchangeable: tf of dups is summed
-            # below and dl is per-doc constant). kind="stable" selects
-            # numpy's radix sort for integer keys: sequential-access
-            # passes instead of quicksort's random probes — measurably
-            # faster on real tparts AND kinder to the shared memory
-            # system when 32 encoder workers run concurrently
+            # below and dl is per-doc constant). kind="stable" is timsort
+            # for int64 keys (numpy's radix sort serves only <=16-bit
+            # integers): it merges the ascending doc runs each packed
+            # run already holds instead of sorting from scratch —
+            # measured faster than the default quicksort on real tparts
             order = np.argsort(gid_post * (maxd + 1) + flat_d, kind="stable")
         else:
             order = np.lexsort((flat_d, gid_post))
@@ -495,26 +491,7 @@ def make_packed_encoder(avgdl: float, k1: float, b: float, block_size: int):
         ]
         return pa.RecordBatch.from_arrays(cols, schema=out_schema)
 
-    def mapper(batches):
-        tame_arrow_threads()
-        # materialize the partition's packed runs and encode in ONE pass:
-        # grouping does not need runs of a term adjacent (see
-        # encode_arrays), so there is no carry-over bookkeeping and no
-        # upstream JVM row sort. Partition size is bounded by n_shuffle
-        # sizing. Per-batch numpy extraction + concat is chunking-safe.
-        parts = [_extract(b) for b in batches if b.num_rows]
-        if not parts:
-            return
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        yield encode_arrays(*_concat_extracted(parts), pid=pid)
-
-    mapper.encode_arrays = encode_arrays
-    mapper.extract = _extract
-    mapper.concat_extracted = _concat_extracted
-    return mapper
+    return encode_arrays
 
 
 TF_COMBINE_SCHEMA = T.StructType(
@@ -672,8 +649,7 @@ def make_tpart_build_task(
     one tpart of packed runs — size n_tparts so that ~|postings| *
     12B / n_tparts fits an executor (raise n_tparts at 10^12 docs the
     same way n_buckets bounds chunk size)."""
-    enc = make_packed_encoder(avgdl, k1, b, block_size)
-    encode_arrays, extract, concat = enc.encode_arrays, enc.extract, enc.concat_extracted
+    encode_arrays = make_packed_encoder(avgdl, k1, b, block_size)
     import pyarrow as pa
 
     out_schema = pa.schema(
@@ -716,13 +692,13 @@ def make_tpart_build_task(
             return []
         ds = pads.dataset(src, format="parquet")
         parts = [
-            extract(bt)
+            extract_runs(bt)
             for bt in ds.to_batches(columns=["term", "bucket", "docs", "tfs", "dls"])
             if bt.num_rows
         ]
         if not parts:
             return []
-        chunk_batch = encode_arrays(*concat(parts), pid=tp)
+        chunk_batch = encode_arrays(*concat_runs(parts), pid=tp)
         tbl = pa.Table.from_batches([chunk_batch])
         bucket_col = np.asarray(tbl.column("bucket").to_numpy(zero_copy_only=False))
         micros = int(tbl.column("enc_micros").to_pandas().sum())
@@ -822,7 +798,6 @@ CHUNK_SCHEMA = T.StructType(
 
 def _encode_partition_flat(
     term: np.ndarray,
-    bucket: np.ndarray | None,
     d: np.ndarray,
     t: np.ndarray,
     l: np.ndarray,
@@ -831,7 +806,7 @@ def _encode_partition_flat(
     b: float,
     block_size: int,
 ) -> pd.DataFrame:
-    """Encode one partition's (term[,bucket],doc)-sorted rows into chunk
+    """Encode one partition's (term, doc)-sorted rows into chunk
     rows via codec.encode_postings_multi — ONE vectorized pass for ALL
     groups (per-group numpy-call overhead dominated the stage before).
 
@@ -847,10 +822,7 @@ def _encode_partition_flat(
     n = len(d)
     new = np.empty(n, dtype=bool)
     new[0] = True
-    if bucket is not None:
-        new[1:] = (term[1:] != term[:-1]) | (bucket[1:] != bucket[:-1])
-    else:
-        new[1:] = term[1:] != term[:-1]
+    new[1:] = term[1:] != term[:-1]
     dup = np.zeros(n, dtype=bool)
     dup[1:] = d[1:] == d[:-1]
     keep = new | ~dup
@@ -858,9 +830,6 @@ def _encode_partition_flat(
         seg = np.cumsum(keep) - 1
         t = np.bincount(seg, weights=t).astype(np.int64)
         d, l, term, new = d[keep], l[keep], term[keep], new[keep]
-        if bucket is not None:
-            bucket = bucket[keep]
-        n = len(d)
     starts = np.flatnonzero(new)
     enc = codec.encode_postings_multi(starts, d, t, l, avgdl, k1, b, block_size)
     g = enc["n_groups"]
@@ -881,9 +850,6 @@ def _encode_partition_flat(
         "max_partial": enc["max_partial"],
         "enc_micros": per,
     }
-    if bucket is not None:
-        data["bucket"] = bucket[starts].astype(np.int32)
-        return pd.DataFrame(data)[[f.name for f in CHUNK_SCHEMA_BUCKETED.fields]]
     return pd.DataFrame(data)[[f.name for f in CHUNK_SCHEMA.fields]]
 
 
@@ -899,7 +865,6 @@ def make_chunk_encoder(avgdl: float, k1: float, b: float, block_size: int):
     def encode_terms(pdf: pd.DataFrame) -> pd.DataFrame:
         return _encode_partition_flat(
             pdf["term"].to_numpy(),
-            None,
             pdf["doc_id"].to_numpy(dtype=np.int64),
             pdf["tf"].to_numpy(dtype=np.int64),
             pdf["doc_len"].to_numpy(dtype=np.int64),
@@ -926,11 +891,6 @@ def make_chunk_encoder(avgdl: float, k1: float, b: float, block_size: int):
             yield encode_terms(leftover)
 
     return mapper
-
-
-CHUNK_SCHEMA_BUCKETED = T.StructType(
-    [T.StructField("bucket", T.IntegerType(), False)] + list(CHUNK_SCHEMA.fields)
-)
 
 
 def sha256_col(col: str = "content"):

@@ -46,21 +46,34 @@ def _batch_matrix(vecs: pd.Series, dim: int) -> np.ndarray:
     return np.asarray(vecs.tolist(), dtype=np.float64)
 
 
+def _exact_cosines(x: np.ndarray, q: list[float]) -> np.ndarray:
+    """Cosine of each row of ``x`` to ``q`` by _cosine_to_query's exact
+    expression, bit for bit: sums run left to right (np.cumsum) like
+    Spark's ``aggregate``, so a row's score never depends on the batch
+    it is scored in (a batch matmul's blocking does — identical vectors
+    could score an ulp apart and tie out of id order). ``x`` keeps its
+    stored element type at literal dims: Spark squares float elements
+    in float32; the high-dim UDF widens to float64 first."""
+    if len(q) > _LITERAL_DIM_MAX:
+        x = x.astype(np.float64)
+    if not len(x):
+        return np.zeros(0, dtype=np.float64)
+    qn = float(np.sqrt(np.dot(q, q)))
+    dots = np.cumsum(x.astype(np.float64) * np.asarray(q, dtype=np.float64), axis=1)[:, -1]
+    nrm = np.sqrt(np.cumsum((x * x).astype(np.float64), axis=1)[:, -1])
+    denom = nrm * qn
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom > 0, dots / denom, 0.0)
+
+
 def _cosine_to_query(vec_col: str, q: list[float]):
     qn = float(np.sqrt(np.dot(q, q)))
     if len(q) > _LITERAL_DIM_MAX:
         from pyspark.sql.pandas.functions import pandas_udf
 
-        qv = np.asarray(q, dtype=np.float64)
-
         @pandas_udf("double")
         def cos_udf(vecs: pd.Series) -> pd.Series:
-            x = _batch_matrix(vecs, len(qv))
-            nrm = np.linalg.norm(x, axis=1) * qn
-            dots = x @ qv
-            with np.errstate(divide="ignore", invalid="ignore"):
-                out = np.where(nrm > 0, dots / nrm, 0.0)
-            return pd.Series(out)
+            return pd.Series(_exact_cosines(_batch_matrix(vecs, len(q)), q))
 
         return cos_udf(F.col(vec_col))
     q_arr = F.array(*[F.lit(float(x)) for x in q])
@@ -709,23 +722,25 @@ class PersistedGraphANN:
         probe_map = {
             int(qid): set(self.ivf._probe_cells(list(qv), nprobe)) for qid, qv in queries
         }
+        qraw = {int(qid): [float(x) for x in qv] for qid, qv in queries}
         qmat = {
-            int(qid): (lambda a: a / max(float(np.linalg.norm(a)), 1e-12))(
+            qid: (lambda a: a / max(float(np.linalg.norm(a)), 1e-12))(
                 np.asarray(qv, dtype=np.float64)
             )
-            for qid, qv in queries
+            for qid, qv in qraw.items()
         }
         all_cells = sorted(set().union(*probe_map.values())) if probe_map else []
-        bq = self.spark.sparkContext.broadcast((probe_map, qmat))
+        bq = self.spark.sparkContext.broadcast((probe_map, qmat, qraw))
         kk, eff = int(k), int(ef)
 
         def search_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            probe_m, qm = bq.value
+            probe_m, qm, qr = bq.value
             cell = int(pdf["cell"].iloc[0])
             pdf = pdf.sort_values(id_col).reset_index(drop=True)
             ids = pdf[id_col].to_numpy()
             pos = {int(v): i for i, v in enumerate(ids)}
-            x = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            raw = np.asarray(pdf[vec_col].tolist())  # stored element type
+            x = raw.astype(np.float64)
             xn = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
             nbrs = [
                 np.fromiter((pos[int(g)] for g in row if int(g) in pos), dtype=np.int64)
@@ -738,10 +753,15 @@ class PersistedGraphANN:
                 if cell not in cells_of_q:
                     continue
                 best, _ = _beam_search(xn, nbrs, entry, qm[qid], max(kk, eff))
-                for s, i in best[:kk]:
+                # the beam navigates by batch-matmul scores; re-score its
+                # result with the exact paths' expression so the top-k and
+                # its ties (cosine desc, id asc) match them bit for bit
+                cand = np.fromiter((i for _, i in best), dtype=np.int64, count=len(best))
+                exact = _exact_cosines(raw[cand], qr[qid])
+                for j in np.lexsort((cand, -exact))[:kk]:
                     out_q.append(qid)
-                    out_v.append(int(ids[i]))
-                    out_c.append(float(s))
+                    out_v.append(int(ids[cand[j]]))
+                    out_c.append(float(exact[j]))
             return pd.DataFrame(
                 {
                     "q_id": pd.Series(out_q, dtype="int64"),

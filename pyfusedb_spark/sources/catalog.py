@@ -7,10 +7,11 @@ lineage, per-stage metrics) committed transactionally, and kill-resume
 that skips committed segments — in plain Python over Parquet directories:
 
     <root>/
-      tf/bucket=K/*.parquet          stage-1 term-frequency rows
-      doc_stats/*.parquet            (doc_id, doc_len, sha256[, norm])
-      index/bucket=K/*.parquet       encoded posting chunks
-      lexicon/*.parquet              (term, df, n_postings)
+      tf/tpart=P/*.parquet           stage-1 packed term-frequency runs
+      doc_stats/*.parquet            (doc_id, doc_len, sha256)
+      doc_stats_full/*.parquet       (doc_id, doc_len, sha256, norm)
+      index/bucket=K/tpart=P/*.parquet   encoded posting chunks
+      lexicon/tpart=P/*.parquet      (term, df, total_tf, max_partial, n_chunks)
       _manifests/<key>.json          one manifest per committed unit
       _manifests/snapshot.json       atomic snapshot listing all manifests
       stats.json                     global stats (N, avgdl, config)

@@ -36,19 +36,19 @@ def work(tp: int, out_dir: str) -> float:
     import pyarrow as pa
     import pyarrow.dataset as pads
 
-    from pyfusedb_spark.functions.udfs import make_packed_encoder
+    from pyfusedb_spark.functions.udfs import concat_runs, extract_runs, make_packed_encoder
 
-    enc = make_packed_encoder(AVGDL, 1.2, 0.75, 128)
+    encode_arrays = make_packed_encoder(AVGDL, 1.2, 0.75, 128)
     src = os.path.join(TF_DIR, f"tpart={tp}")
     ds = pads.dataset(src, format="parquet")
     parts = [
-        enc.extract(bt)
+        extract_runs(bt)
         for bt in ds.to_batches(columns=["term", "bucket", "docs", "tfs", "dls"])
         if bt.num_rows
     ]
     c0 = time.process_time()
     t0 = time.perf_counter()
-    chunk = enc.encode_arrays(*enc.concat_extracted(parts), pid=tp)
+    chunk = encode_arrays(*concat_runs(parts), pid=tp)
     micros = time.perf_counter() - t0
     cpu = time.process_time() - c0
     if WRITE:

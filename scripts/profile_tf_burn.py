@@ -70,31 +70,34 @@ def _work_full(lo: int, hi: int, tmpdir: str) -> int:
     import pyarrow as pa
 
     from pyfusedb_spark import fsio
-    from pyfusedb_spark.functions.udfs import _get_analyzer, make_packed_tf_exploder
+    from pyfusedb_spark.functions.udfs import _get_analyzer, make_run_packer
     from pyfusedb_spark.sources.corpus import _gen_rows
 
     n_tparts = 64
-    packer = make_packed_tf_exploder(PRESET, 250_000, "content", n_tparts, 4)
+    pack_batch = make_run_packer(250_000, n_tparts, 4)
     analyze = _get_analyzer(PRESET).analyze
     pid = os.getpid()
     writers = {}
-    sha_writer = None
+    ds_writer = None
     n = 0
     for b0 in range(lo, hi, BATCH):
         b1 = min(hi, b0 + BATCH)
         contents = _gen_rows(b0, b1)["content"].tolist()
         ids = np.arange(b0, b1, dtype=np.int64)
         shas = [hashlib.sha256((c or "").encode()).hexdigest() for c in contents]
-        sha_tbl = pa.table({"doc_id": pa.array(ids), "sha256": pa.array(shas)})
-        if sha_writer is None:
-            d = os.path.join(tmpdir, "sha")
+        counters = [Counter(analyze(c or "")) for c in contents]
+        lens = np.fromiter((sum(c.values()) for c in counters), np.int64, len(counters))
+        ds_tbl = pa.table({"doc_id": pa.array(ids), "doc_len": pa.array(lens),
+                            "sha256": pa.array(shas)})
+        if ds_writer is None:
+            d = os.path.join(tmpdir, "doc_stats")
             fsio.makedirs(d)
-            sha_writer = fsio.AtomicParquetWriter(
-                os.path.join(d, f"part-{pid}.parquet"), sha_tbl.schema,
+            ds_writer = fsio.AtomicParquetWriter(
+                os.path.join(d, f"part-{pid}.parquet"), ds_tbl.schema,
                 compression="snappy",
             )
-        sha_writer.write_table(sha_tbl)
-        rb = packer.pack_batch(ids, [Counter(analyze(c or "")) for c in contents])
+        ds_writer.write_table(ds_tbl)
+        rb = pack_batch(ids, counters, lens)
         if rb is None:
             continue
         tps = np.asarray(rb.column("tpart").to_numpy(zero_copy_only=False))
@@ -115,8 +118,8 @@ def _work_full(lo: int, hi: int, tmpdir: str) -> int:
         n += len(ids)
     for w in writers.values():
         w.close()
-    if sha_writer is not None:
-        sha_writer.close()
+    if ds_writer is not None:
+        ds_writer.close()
     return n
 
 
@@ -167,15 +170,13 @@ def _work_encode(lo: int, hi: int, tmpdir: str) -> int:
     merge (dictionary-encode + integer lexsort + delta/varint/block-max
     pack) over a synthetic tpart, one tpart per unit."""
     global _ENC_BATCH
-    from pyfusedb_spark.functions.udfs import make_packed_encoder
+    from pyfusedb_spark.functions.udfs import extract_runs, make_packed_encoder
 
     if _ENC_BATCH is None:
         _ENC_BATCH = _synth_packed_batch()
-    enc = make_packed_encoder(60.0, 1.2, 0.75, 128)
-    n = 0
+    encode_arrays = make_packed_encoder(60.0, 1.2, 0.75, 128)
     for _ in range(lo, hi):
-        for out in enc(iter([_ENC_BATCH])):
-            n += out.num_rows
+        encode_arrays(*extract_runs(_ENC_BATCH), pid=0)
     return hi - lo
 
 

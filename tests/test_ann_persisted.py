@@ -253,3 +253,33 @@ def test_persisted_range_search_exact(emb, ivf):
         for r in ivf.range_search(qv, 0.3).collect()
     ]
     assert pruned == full and len(full) > 0
+
+
+@pytest.mark.parametrize("elem", ["double", "float"])
+def test_duplicate_vectors_tie_in_id_order_across_tiers(spark, tmp_path, elem):
+    """Identical vectors spread over several graph segments must score
+    bit-identically in every tier, so ties rank in id order: graph (its
+    beam scores with batch matmuls of varying shape), IVF and LSH all
+    return exactly the brute-force rows, cosines compared unrounded."""
+    rng = np.random.default_rng(3)
+    base = rng.standard_normal((60, 8)).astype(np.float32)
+    dup_ids = [5, 17, 29, 41, 53]
+    base[dup_ids] = base[5]
+    rows = [(i, [float(v) for v in base[i]]) for i in range(60)]
+    emb = spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
+    ivf = knn.PersistedIVF.build(emb, str(tmp_path / "ivf"), nlist=2, sample_n=64)
+    graph = knn.PersistedGraphANN.build(ivf, m=4, seg_target=8)
+    segs = {r["seg"] for r in graph.graph_df.where(F.col("vec_id").isin(dup_ids)).collect()}
+    assert len(segs) > 1, "duplicates must span several segments"
+    qv = [float(v) + 0.01 for v in base[5]]
+
+    def scored(df):
+        return [(r["vec_id"], r["cosine"]) for r in df.collect()]
+
+    exact = scored(knn.brute_force_topk(emb, qv, 8))
+    assert [i for i, _ in exact[:5]] == dup_ids
+    assert len({s for _, s in exact[:5]}) == 1
+    assert scored(graph.topk(qv, k=8, nprobe=2, ef=1_000_000)) == exact
+    assert scored(ivf.topk(qv, k=8, nprobe=2)) == exact
+    assert scored(ivf.topk_exact(qv, k=8)) == exact
+    assert scored(knn.lsh_ann_topk(emb, qv, k=8, max_hamming=16)) == exact

@@ -2,7 +2,7 @@
 
 - results identical under different input partitioning and bucket/salt
   counts;
-- a killed build (simulated by deleting a committed bucket segment)
+- a killed build (simulated by deleting a committed tpart slice)
   resumes by rebuilding ONLY the missing unit, and the resumed index is
   identical to a fresh build.
 """
@@ -50,44 +50,9 @@ def test_invariance_under_partitioning_and_salt(spark, tmp_path):
         np.testing.assert_allclose([s for _, s in ra], [s for _, s in rb], atol=1e-9)
 
 
-def test_kill_resume(spark, tmp_path):
-    """Per-bucket posting mode: the resume unit is one doc-range bucket
-    segment (file-shuffle's per-tpart analog is tested below)."""
-    corpus = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
-    )
-    out = str(tmp_path / "resume")
-    cfg = IndexConfig(n_buckets=4, shuffle_partitions=4, posting_mode="per-bucket")
-    build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
-    idx = FuseIndex(spark, out)
-    before = _search_all(idx)
-
-    # simulate a kill after bucket=1 was lost: remove its data + manifest
-    shutil.rmtree(os.path.join(out, "index", "bucket=1"))
-    os.remove(os.path.join(out, "_manifests", "bucket=1.json"))
-    # lexicon depends on every bucket -> drop its manifest too
-    os.remove(os.path.join(out, "_manifests", "stage_lexicon.json"))
-
-    # record mtimes of the untouched committed segments
-    untouched = {}
-    for b in (0, 2, 3):
-        d = os.path.join(out, "index", f"bucket={b}")
-        untouched[b] = max(os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d))
-
-    build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg, resume=True)
-
-    for b, mtime in untouched.items():
-        d = os.path.join(out, "index", f"bucket={b}")
-        assert max(os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d)) == mtime, (
-            f"bucket {b} was rebuilt but should have been skipped"
-        )
-    after = _search_all(FuseIndex(spark, out))
-    assert before == after
-
-
 def test_kill_resume_file_shuffle(spark, tmp_path):
-    """File-shuffle posting mode: the resume unit is one TPART (a term-
-    hash slice spanning every bucket). Deleting one tpart's slices +
+    """The posting resume unit is one TPART (a term-hash slice spanning
+    every bucket). Deleting one tpart's slices +
     manifest must rebuild exactly that tpart and leave the other tparts'
     files untouched, and the resumed index must answer identically."""
     import glob
@@ -96,8 +61,7 @@ def test_kill_resume_file_shuffle(spark, tmp_path):
         [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
     )
     out = str(tmp_path / "resume_fs")
-    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4,
-                      posting_mode="file-shuffle")
+    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4)
     build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
     idx = FuseIndex(spark, out)
     before = _search_all(idx)
@@ -133,8 +97,7 @@ def test_kill_resume_file_shuffle_masked_stage_manifest(spark, tmp_path):
         [(i, c) for i, c in enumerate(PANGRAMS)], "doc_id long, content string"
     )
     out = str(tmp_path / "resume_fs2")
-    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4,
-                      posting_mode="file-shuffle")
+    cfg = IndexConfig(n_buckets=2, shuffle_partitions=4, n_tparts=4)
     build_index(spark, corpus, out, doc_id_col="doc_id", config=cfg)
     before = _search_all(FuseIndex(spark, out))
     import glob
